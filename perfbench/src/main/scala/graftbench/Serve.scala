@@ -27,6 +27,7 @@ final class Serve(val spark: SparkSession, seed: Long) extends Workload {
   private var setupSplit = (0.0, 0.0)
   /** Answers kept for the oracles, which run after the window. */
   private val answers = new java.util.concurrent.ConcurrentLinkedQueue[Answer]()
+  private val warmupFailures = mutable.ArrayBuffer[String]()
 
   override def setup(dir: String): Unit = {
     docs = Gen.docs(new Rng(seed), centres, 0L, Docs)
@@ -80,16 +81,25 @@ final class Serve(val spark: SparkSession, seed: Long) extends Workload {
       answers.add(Answer(q.text.map(t => q.copy(vec = db.embedder.embed(t))).getOrElse(q), out))
     }
 
+  /** The full closed-loop load for [[WarmupSeconds]], on query streams of
+    * their own: query latency keeps falling for the first 10-20 s of load
+    * while the JIT compiles the planner and engine paths, and a window
+    * that starts inside that fall measures how far it has got. Its
+    * answers go to the oracles with the timed ones. */
   override def warmup(): Unit = {
     val rec = new Recorder
-    val off = new Tracer(spark, enabled = false)
-    queries(-1).take(Mix.size).foreach(ask(_, off, rec))
-    answers.clear()
+    closedLoop(WarmupSeconds, -WarmupClients until 0, new Tracer(spark, enabled = false), rec)
+    warmupFailures ++= rec.failureList
   }
 
-  override def run(seconds: Double, tracer: Tracer, rec: Recorder): Unit = {
+  override def run(seconds: Double, tracer: Tracer, rec: Recorder): Unit =
+    closedLoop(seconds, 0 until Clients, tracer, rec)
+
+  /** One thread per client stream; each sends its next query when the
+    * previous answer is back, until `seconds` have passed. */
+  private def closedLoop(seconds: Double, clients: Seq[Int], tracer: Tracer, rec: Recorder): Unit = {
     val deadline = System.nanoTime() + (seconds * 1e9).toLong
-    val threads = (0 until Clients).map { c =>
+    val threads = clients.map { c =>
       val t = new Thread(() => {
         val it = queries(c)
         while (System.nanoTime() < deadline) ask(it.next(), tracer, rec)
@@ -105,7 +115,7 @@ final class Serve(val spark: SparkSession, seed: Long) extends Workload {
     "table.files" -> Disk.dataFiles(Disk.tableFiles(spark, root), root).toDouble)
 
   override def finish(recs: Seq[Recorder], windowSeconds: Double): Outcome = {
-    val failures = mutable.ArrayBuffer[String]()
+    val failures = mutable.ArrayBuffer[String](warmupFailures.toSeq: _*)
     val byId = docs.map(d => d.id -> d).toMap
     val recalls = mutable.ArrayBuffer[Double]()
     val selectivities = mutable.ArrayBuffer[Double]()
@@ -151,7 +161,7 @@ final class Serve(val spark: SparkSession, seed: Long) extends Workload {
         "corpus_user_bytes" -> userBytes.toLong,
         "setup_load_s" -> setupSplit._1, "setup_index_build_s" -> setupSplit._2,
         "table_bytes" -> Disk.bytes(live)),
-      checks = all.size + 1,
+      checks = all.size + warmupFailures.size + 1,
       checkFailures = failures.toVector)
   }
 
@@ -199,6 +209,10 @@ object Serve {
   val Docs = 600
   val Clusters = 24
   val Clients = 2
+  val WarmupSeconds = 12.0
+  /** Warm-up streams: one a core, so the planner and engine paths reach
+    * the JIT's compile thresholds in fewer seconds than at [[Clients]]. */
+  val WarmupClients: Int = Runtime.getRuntime.availableProcessors()
   val K = 10
   /** Indexed answers must find at least this share of the exact top-k. */
   val RecallFloor = 0.8
