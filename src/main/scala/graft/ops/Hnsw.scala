@@ -539,7 +539,7 @@ object Hnsw {
       val tmp = new org.apache.hadoop.fs.Path(graphPath + "__compacting")
       merged.write.mode("overwrite").parquet(tmp.toString)
       fs.delete(p, true)
-      fs.rename(tmp, p)
+      graft.core.HadoopFs.rename(fs, tmp, p)
       true
     }
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.core.VectorSchema
-import graft.sources.{GvdbTable, GvdbWrite}
+import graft.sources.GvdbTable
 import graft.table.VectorTable
 
 /** Row-level SQL for gvdb tables — `MERGE INTO` (the CDC-apply-by-SQL
@@ -21,10 +21,10 @@ import graft.table.VectorTable
   * machinery (the `vdb_upsert` semantics) instead of Spark's
   * `SupportsRowLevelOperations` plumbing — and with the same
   * granularity a group-based connector would reach: rewrites are
-  * FILE-GROUP copy-on-write ([[GvdbRowLevel.rewrite]]), replacing only
-  * the part files that hold touched rows. Subquery predicates work
-  * throughout (the deferred Column evaluation re-plans them like any
-  * Dataset operation).
+  * FILE-GROUP copy-on-write ([[GvdbRowLevel.groupCopyOnWriteMutated]]),
+  * replacing only the part files that hold touched rows. Subquery
+  * predicates work throughout (the deferred Column evaluation re-plans
+  * them like any Dataset operation).
   *
   * The rule runs in the analyzer's extended-resolution slot. Because
   * the table advertises `ACCEPT_ANY_SCHEMA`, Spark deliberately leaves
@@ -112,24 +112,6 @@ class GvdbMergeRule(spark: SparkSession) extends Rule[LogicalPlan]
   }
 }
 
-/** The executed merge. Row classification is one full-outer join of
-  * target and source on the merge condition, with presence flags and a
-  * first-matching-action CASE — exactly the `MergeRows` semantics,
-  * expressed as plain DataFrame operators:
-  *
-  *  - DELETES-ONLY merges (every action a DELETE) stay merge-on-read:
-  *    the matched target ids are tombstoned ([[VectorTable.deleteIds]],
-  *    O(matched), no data rewrite) — the cheap CDC-retraction shape;
-  *  - merges carrying UPDATE/INSERT actions route through
-  *    [[GvdbRowLevel.rewrite]]: FILE-GROUP copy-on-write on an
-  *    un-indexed table (only the part files holding touched rows are
-  *    replaced — Spark's group-based row-level operation at file
-  *    granularity, so a CDC batch touching 0.1% of the files rewrites
-  *    0.1% of the table; an insert-only merge is a pure append),
-  *    whole-table copy-on-write with index rebuild when a persisted
-  *    tier exists (the [[VectorTable.vacuum]] cost contract — the
-  *    rebuild dominates either way).
-  */
 /** Plain (non-Expression) holder for the merge spec: keeps the
   * possibly-still-unresolved expressions out of the command's
   * TreeNode-scanned product members, so `CheckAnalysis` sees a
@@ -165,11 +147,6 @@ private[graft] object GvdbRowLevel {
       case dt => dt
     }
 
-  /** The provenance column threaded through a rewrite's result frame:
-    * the target row's ORIGINAL id for target-derived rows (stable even
-    * when the command rewrites `id` itself), null for inserted rows. */
-  val Origin = "__gvdb_origin"
-
   /** Pinned tombstone-table schema — a schema-less parquet read throws
     * on a file-less directory (reachable mid-append: the committer
     * creates the output dir before the job's plan runs). */
@@ -177,44 +154,14 @@ private[graft] object GvdbRowLevel {
     org.apache.spark.sql.types.StructField(VectorSchema.ID,
       org.apache.spark.sql.types.StringType)))
 
-  /** Routes a mutating rewrite. Without a persisted index the rewrite
-    * is FILE-GROUP copy-on-write ([[groupCopyOnWrite]]): only the part
-    * files that CONTAIN mutated rows are replaced — Spark's
-    * group-based row-level operation at file granularity, so a CDC
-    * batch touching 0.1% of a 100 TB table rewrites ~0.1% of its
-    * files, not the table. With an index tier present the rewrite
-    * stays whole-table ([[copyOnWrite]]) with an index rebuild: a
-    * rewrite invalidates persisted tiers either way, and the rebuild
-    * dominates the write regardless of its granularity. */
-  def rewrite(spark: SparkSession, root: String,
-      result: org.apache.spark.sql.DataFrame,
-      touched: org.apache.spark.sql.DataFrame): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // one writer turn spans the whole rewrite (append + victim drop +
-    // tombstone fold + snapshot expiry); inner mutators reenter
-    graft.core.WriterLock.withLock(fs, root) {
-      val table = new VectorTable(spark, root, 1)
-      val indexed = table.annIndexMeta.isDefined || table.hnswIndexMeta.isDefined ||
-        table.ivfPqIndexMeta.isDefined || table.bqIndexMeta.isDefined
-      if (indexed) copyOnWrite(spark, root, result.drop(Origin))
-      else groupCopyOnWrite(spark, root, result, touched)
-    }
-  }
+  /** Runs `body` as one writer turn on `root`: a row-level command
+    * reads the target snapshot it rewrites UNDER the lock, so no other
+    * writer can commit between that read and the rewrite (inner
+    * mutators reenter). */
+  def withWriterLock[T](spark: SparkSession, root: String)(body: => T): T =
+    graft.core.WriterLock.withLock(new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), root)(body)
 
-  /** File-group copy-on-write: victims = the part files holding any
-    * `touched` id; the replacement (victim-origin result rows + the
-    * inserts) appends FIRST — its plan still reads the victims — then
-    * the victim files drop, the tombstone ids they carried leave the
-    * tombstone table (keeping the raw-minus-tombstones arithmetic
-    * exact: a victim's dead rows are now physically gone), and ONLY
-    * the snapshots whose manifests reference a victim expire
-    * (selective retention). Rows in victim files that the command did NOT touch
-    * ride along via the origin semi-join; rows in untouched files are
-    * never read twice nor rewritten. Crash window: between the append
-    * and the victim deletion a reader could see a touched row twice —
-    * the same single-writer, non-transactional contract as the rest
-    * of the format's rewrite points. */
   /** Which part files hold any of `touchedIds` (the CoW victims), and
     * the pinned id set those files carry. Pruned by parquet FOOTER id
     * statistics: only the files whose id [min,max] overlaps a touched
@@ -321,75 +268,56 @@ private[graft] object GvdbRowLevel {
     (victims, victimIds)
   }
 
-  private def groupCopyOnWrite(spark: SparkSession, root: String,
-      result: org.apache.spark.sql.DataFrame,
-      touched: org.apache.spark.sql.DataFrame): Unit = {
+  /** THE row-level write (MERGE, UPDATE and upsert all end here):
+    * file-group copy-on-write fed only the rows the command writes.
+    * `mutated` carries updated rows post-assignment plus deduped
+    * inserts; the untouched rows of victim files ride along by reading
+    * the victim files DIRECTLY (raw rows minus tombstoned ids minus
+    * `preImage`, the pre-assignment ids of mutated/deleted target
+    * rows). Every updated row's pre-image file is a victim by
+    * construction (its id is in `touched`), so the replacement is
+    * exactly "inserts ∪ every surviving row of the victim files" —
+    * the table's untouched files are never read twice nor rewritten.
+    * Crash window: between the append and the victim deletion a reader
+    * could see a touched row twice — the single-writer,
+    * non-transactional contract of the format's other rewrite points. */
+  private[graft] def groupCopyOnWriteMutated(spark: SparkSession, root: String,
+      mutated: org.apache.spark.sql.DataFrame,
+      touched: org.apache.spark.sql.DataFrame,
+      preImage: org.apache.spark.sql.DataFrame): Unit = withWriterLock(spark, root) {
     val hfs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val touchedIds = touched
       .select(col(touched.columns.head).as(VectorSchema.ID)).distinct()
       .localCheckpoint(true) // reused: candidate pruning + victim-id pin
     val (victims, victimIds) = victimLookup(spark, root, touchedIds)
-    val replacement = result.where(col(Origin).isNull)
-      .unionByName(result.join(
-        victimIds.withColumnRenamed(VectorSchema.ID, Origin), Seq(Origin), "left_semi"))
-      .drop(Origin)
+    val replacement =
+      if (victims.isEmpty) mutated
+      else {
+        val raw = spark.read.schema(VectorSchema.schema).parquet(victims.toSeq: _*)
+        val tombPath = new org.apache.hadoop.fs.Path(root + ".tombstones")
+        val live =
+          if (!hfs.exists(tombPath)) raw
+          else raw.join(broadcast(spark.read.schema(tombSchema)
+            .parquet(tombPath.toString)), Seq(VectorSchema.ID), "left_anti")
+        val rideAlong = live.join(
+          preImage.select(col(preImage.columns.head).cast("string")
+            .as(VectorSchema.ID)).distinct(),
+          Seq(VectorSchema.ID), "left_anti")
+        mutated.unionByName(rideAlong)
+      }
     appendAndRetire(spark, root, hfs, replacement, victims, victimIds)
   }
 
-  /** Touched-first group copy-on-write (guide §1.2/§3 — evaluate the
-    * source↔target join once, feed the rewrite only MUTATED rows):
-    * `mutated` carries ONLY the rows the command writes (updated rows
-    * post-assignment + deduped inserts — never the whole-table copy
-    * rows the legacy path projected and then semi-joined away), and the
-    * untouched rows of victim files ride along by reading the victim
-    * files DIRECTLY (raw rows minus tombstoned ids minus `preImage`,
-    * the pre-assignment ids of mutated/deleted target rows). Same
-    * replacement set as [[groupCopyOnWrite]] — every updated row's
-    * pre-image file is a victim by construction (its id is in
-    * `touched`), so "mutated ∪ victim-ride-alongs" ≡ "inserts ∪ result
-    * ⋉ victimIds" — with the full-table copy projection never built.
-    * Caller contract: the consuming command verified the table is
-    * UNINDEXED (an index tier forces the whole-table CoW, which needs
-    * every surviving row). */
-  private[graft] def groupCopyOnWriteMutated(spark: SparkSession, root: String,
-      mutated: org.apache.spark.sql.DataFrame,
-      touched: org.apache.spark.sql.DataFrame,
-      preImage: org.apache.spark.sql.DataFrame): Unit = {
-    val hfs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.WriterLock.withLock(hfs, root) {
-      val touchedIds = touched
-        .select(col(touched.columns.head).as(VectorSchema.ID)).distinct()
-        .localCheckpoint(true) // reused: candidate pruning + victim-id pin
-      val (victims, victimIds) = victimLookup(spark, root, touchedIds)
-      val replacement =
-        if (victims.isEmpty) mutated
-        else {
-          val raw = spark.read.schema(VectorSchema.schema).parquet(victims.toSeq: _*)
-          val tombPath = new org.apache.hadoop.fs.Path(root + ".tombstones")
-          val live =
-            if (!hfs.exists(tombPath)) raw
-            else raw.join(broadcast(spark.read.schema(tombSchema)
-              .parquet(tombPath.toString)), Seq(VectorSchema.ID), "left_anti")
-          val rideAlong = live.join(
-            preImage.select(col(preImage.columns.head).cast("string")
-              .as(VectorSchema.ID)).distinct(),
-            Seq(VectorSchema.ID), "left_anti")
-          mutated.unionByName(rideAlong)
-        }
-      appendAndRetire(spark, root, hfs, replacement, victims, victimIds)
-    }
-  }
-
-  /** Shared tail of the group-CoW paths: dim gate, extract recompute,
-    * append, tombstone fold, victim deletion, selective snapshot
-    * expiry. */
+  /** The group rewrite's tail: dim gate, LSH buckets and extract
+    * recompute, append, tombstone fold, victim deletion, selective
+    * snapshot expiry, graph/code tier rebuild. */
   private def appendAndRetire(spark: SparkSession, root: String,
       hfs: org.apache.hadoop.fs.FileSystem,
       replacement: org.apache.spark.sql.DataFrame,
       victims: Array[String],
       victimIds: org.apache.spark.sql.DataFrame): Unit = {
+    val table = new VectorTable(spark, root, 1)
     // the dim gate the insert path applies (a group write bypasses
     // GvdbWrite.insert, but mixed dimensions must still be impossible)
     val dimHead = spark.read.schema(VectorSchema.schema).parquet(root)
@@ -403,9 +331,15 @@ private[graft] object GvdbRowLevel {
             size(col(VectorSchema.EMBEDDING)).cast("string")))))
       case None => replacement
     }
+    // LSH tier: every written row carries fresh buckets, ride-alongs
+    // included (their files are read with the contract schema), so the
+    // bucket prefilter stays complete without a rebuild
+    val bucketed = table.withAnnBuckets(checked,
+      dimHead.orElse(replacement.select(size(col(VectorSchema.EMBEDDING)))
+        .head(1).headOption.map(_.getInt(0))).getOrElse(1))
     // recompute extract columns (derived from metadata) — every append
     // site must, or a mapped JSON filter would mis-evaluate the rows
-    val toAppend = graft.sources.GvdbExtracts.withColumns(checked,
+    val toAppend = graft.sources.GvdbExtracts.withColumns(bucketed,
       graft.sources.GvdbExtracts.spec(hfs, root))
     graft.core.PlanDump.dump(toAppend, "groupcow_append")
     toAppend.write.mode("append").parquet(root)
@@ -424,7 +358,7 @@ private[graft] object GvdbRowLevel {
           .join(victimIds, Seq(VectorSchema.ID), "left_anti")
           .write.mode("overwrite").parquet(scratch.toString)
         hfs.delete(tombPath, true)
-        hfs.rename(scratch, tombPath)
+        graft.core.HadoopFs.rename(hfs, scratch, tombPath)
       }
       victims.foreach(f => hfs.delete(new org.apache.hadoop.fs.Path(f), false))
       // data files deleted: ONLY the snapshot manifests referencing a
@@ -432,54 +366,36 @@ private[graft] object GvdbRowLevel {
       // rewrite keeps serving time travel (Delta/Iceberg-style
       // selective expiry, not the vacuum/reindex retention-zero rule,
       // which is for whole-table rewrites where every manifest is dead)
-      new VectorTable(spark, root, 1).expireSnapshotsReferencing(
+      table.expireSnapshotsReferencing(
         victims.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet)
     }
+    // graph/code tiers hold the replaced rows' old vectors: rebuild the
+    // active one over the live rows (the vacuum contract)
+    table.rebuildIndex()
     // (the replacement files stay unbloomed-conservative until the
     // next victim lookup reads — and then blooms — them)
   }
-
-  /** Whether `root` carries any persisted index tier — tiered tables
-    * take the whole-table CoW (index rebuild dominates), so the
-    * touched-first fast paths require this to be false. */
-  private[graft] def indexed(spark: SparkSession, root: String): Boolean = {
-    val t = new VectorTable(spark, root, 1)
-    t.annIndexMeta.isDefined || t.hnswIndexMeta.isDefined ||
-      t.ivfPqIndexMeta.isDefined || t.bqIndexMeta.isDefined
-  }
-
-  /** The whole-table copy-on-write tail: stage the result to a scratch
-    * parquet (the result plan READS the target the overwrite is about
-    * to delete), re-insert with overwrite, rebuild whichever index
-    * tier was active (the vacuum contract). */
-  def copyOnWrite(spark: SparkSession, root: String,
-      result: org.apache.spark.sql.DataFrame): Unit = {
-    // staged beside the table (see the tombstone-rewrite note): the
-    // result plan READS the target the overwrite is about to delete,
-    // and the scratch must live on the table's FileSystem, not the
-    // driver's local disk
-    val scratch = root + ".rowlevel__staged"
-    val hfs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      result.write.mode("overwrite").parquet(scratch)
-      // the builders resolve the embedding dimension from DATA
-      // (VectorTable.actualDim), so the dummy-dim handle is safe here
-      val table = new VectorTable(spark, root, 1)
-      val (ann, hnsw, ivfpq, bq) =
-        (table.annIndexMeta, table.hnswIndexMeta, table.ivfPqIndexMeta, table.bqIndexMeta)
-      GvdbWrite.insert(spark, root, spark.read.parquet(scratch), overwrite = true, None)
-      ann.foreach(m => table.buildAnnIndex(m.tables, m.bits, m.seed))
-      hnsw.foreach(m => table.buildHnswIndex(m.m, m.efConstruction))
-      ivfpq.foreach(m => table.buildIvfPqIndex(m.nCells, m.m, m.pqK, m.nProbe, m.shortlistFactor))
-      bq.foreach(m => table.buildBqIndex(m.coarseFactor, m.fineFactor))
-    } finally {
-      hfs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-      ()
-    }
-  }
 }
 
+/** The executed merge. Row classification is one full-outer join of
+  * target and source on the merge condition, with presence flags and a
+  * first-matching-action CASE — exactly the `MergeRows` semantics,
+  * expressed as plain DataFrame operators:
+  *
+  *  - DELETES-ONLY merges (every action a DELETE) stay merge-on-read:
+  *    the matched target ids are tombstoned ([[VectorTable.deleteIds]],
+  *    O(matched), no data rewrite) — the cheap CDC-retraction shape;
+  *  - merges carrying UPDATE/INSERT actions rewrite through
+  *    [[GvdbRowLevel.groupCopyOnWriteMutated]]: only the part files
+  *    holding touched rows are replaced, so a CDC batch touching 0.1% of
+  *    the files rewrites 0.1% of the table; an insert-only merge is a
+  *    pure append. An indexed table takes the same path (the LSH
+  *    buckets are computed on the written rows, the graph/code tier
+  *    rebuilds over the live rows).
+  *
+  * The whole command is one writer turn: the target snapshot is read
+  * under the lock the rewrite commits under.
+  */
 case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     sourcePlan: LogicalPlan, spec: GvdbMergeSpec)
     extends LeafRunnableCommand
@@ -493,6 +409,9 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
   private val S = "__gvdb_s_present"
   private val ACT = "__gvdb_action"
   private val SK = "__gvdb_src_key"
+  /** The target row's ORIGINAL id (stable even when the merge rewrites
+    * `id` itself), null for inserted rows. */
+  private val Origin = "__gvdb_origin"
   private val Copy = 0
   private val Discard = -1
 
@@ -503,11 +422,11 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     case o => o
   }
 
-  /** Touched-first fast-path eligibility (guide §1.2/§3: evaluate the
-    * id join once against a key-pruned target, not three times against
-    * the whole table). Eligible when (a) there are no NOT MATCHED BY
-    * SOURCE actions (those classify every target row), (b) the resolved
-    * merge condition carries a conjunct `t.<id> = <expr over source>`,
+  /** Key-pruned join eligibility (guide §1.2/§3: evaluate the id join
+    * once against a key-pruned target, not against the whole table).
+    * Eligible when (a) there are no NOT MATCHED BY SOURCE actions
+    * (those classify every target row), (b) the resolved merge
+    * condition carries a conjunct `t.<id> = <expr over source>`,
     * and (c) every INSERT action assigns the id to that same source
     * expression — so an inserted id can never collide with a LIVE row
     * outside the key-pruned candidate set (a target row holding the
@@ -544,62 +463,54 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
                     }
                 }
               assigned.exists(e => stripCast(e).semanticEquals(stripCast(k)))
-            case _ => false // non-insert NOT MATCHED action: stay legacy
+            case _ => false
           }
         }
       }
-    } catch { case _: Throwable => None } // unresolvable shape: stay legacy
+    } catch { case _: Throwable => None } // unresolvable shape: full join
   }
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    val targetFields = targetPlan.output
-    val idField = targetFields.find(_.name == VectorSchema.ID).get
-    val tDf = GraftBridge.ofRows(spark, targetPlan)
-    val sDf = GraftBridge.ofRows(spark, sourcePlan)
-    val fullJoined = tDf.withColumn(T, lit(1))
-      .join(sDf.withColumn(S, lit(1)), GraftBridge.column(spec.cond), "full_outer")
-
-    val hasUpdateOrInsert = (matchedActions ++ notMatchedActions ++ notMatchedBySourceActions)
-      .exists { case _: DeleteAction => false; case _ => true }
-
-    // Touched-first fast path: the target side of the classification
-    // join is SEMI-JOINED down to rows whose id appears among the
-    // source keys (at 100 TB: one broadcast-pruned scan instead of a
-    // full-table full-outer join), the source and the classified join
-    // are persisted and evaluated ONCE (the legacy path re-evaluated
-    // the full join for the cardinality gate, the touched-id pin, and
-    // twice inside the replacement union), and the rewrite receives
-    // only the MUTATED rows — untouched victim-file rows ride along
-    // from the victim files themselves (groupCopyOnWriteMutated).
-    // A merge that needs every target row (NOT MATCHED BY SOURCE), a
-    // non-id join condition, an insert reassigning ids away from the
-    // join key, or an indexed table (whole-table CoW) stays on the
-    // legacy path below, byte-identical to r12.
-    val srcKey = fastPathKey(fullJoined, idField)
-    val fast = srcKey.isDefined &&
-      (!hasUpdateOrInsert || !GvdbRowLevel.indexed(spark, root))
-    val joined = srcKey match {
-      case Some(key) if fast =>
-        // source on the LEFT (full outer is symmetric; sides are told
-        // apart by the T/S presence columns, never position): the
-        // source plan appears twice — once as the join side, once
-        // inside the semi-join key set — and the analyzer's
-        // DeduplicateRelations re-aliases the SECOND occurrence. The
-        // key subtree only surfaces the SK alias, so it is the one
-        // occurrence whose exprIds may change; the join-side source
-        // must keep its original exprIds, which the star-expanded
-        // action assignments reference directly.
-        val keys = sDf.select(GraftBridge.column(key).as(SK)).distinct()
-        val tSemi = tDf.join(keys, GraftBridge.column(idField) === col(SK), "left_semi")
-        sDf.withColumn(S, lit(1))
-          .join(tSemi.withColumn(T, lit(1)), GraftBridge.column(spec.cond), "full_outer")
-      case _ => fullJoined
+  override def run(spark: SparkSession): Seq[Row] =
+    GvdbRowLevel.withWriterLock(spark, root) {
+      val targetFields = targetPlan.output
+      val idField = targetFields.find(_.name == VectorSchema.ID).get
+      val tDf = GraftBridge.ofRows(spark, targetPlan)
+      val sDf = GraftBridge.ofRows(spark, sourcePlan)
+      val fullJoined = tDf.withColumn(T, lit(1))
+        .join(sDf.withColumn(S, lit(1)), GraftBridge.column(spec.cond), "full_outer")
+      val hasUpdateOrInsert = (matchedActions ++ notMatchedActions ++ notMatchedBySourceActions)
+        .exists { case _: DeleteAction => false; case _ => true }
+      // The merge's own shape picks the join. With an id key the target
+      // side is SEMI-JOINED down to rows whose id appears among the
+      // source keys (at 100 TB: one broadcast-pruned scan instead of a
+      // full-table full-outer join) and the classified join is pinned,
+      // so it is evaluated ONCE. A merge that needs every target row
+      // (NOT MATCHED BY SOURCE), a non-id join condition, or an insert
+      // reassigning ids away from the join key classifies over the full
+      // join, unpinned. Both feed the same rewrite.
+      val srcKey = fastPathKey(fullJoined, idField)
+      val joined = srcKey match {
+        case Some(key) =>
+          // source on the LEFT (full outer is symmetric; sides are told
+          // apart by the T/S presence columns, never position): the
+          // source plan appears twice — once as the join side, once
+          // inside the semi-join key set — and the analyzer's
+          // DeduplicateRelations re-aliases the SECOND occurrence. The
+          // key subtree only surfaces the SK alias, so it is the one
+          // occurrence whose exprIds may change; the join-side source
+          // must keep its original exprIds, which the star-expanded
+          // action assignments reference directly.
+          val keys = sDf.select(GraftBridge.column(key).as(SK)).distinct()
+          val tSemi = tDf.join(keys, GraftBridge.column(idField) === col(SK), "left_semi")
+          sDf.withColumn(S, lit(1))
+            .join(tSemi.withColumn(T, lit(1)), GraftBridge.column(spec.cond), "full_outer")
+        case None => fullJoined
+      }
+      runClassified(spark, joined, srcKey.isDefined, targetFields, idField, hasUpdateOrInsert)
     }
-    runClassified(spark, joined, fast, targetFields, idField, hasUpdateOrInsert)
-  }
 
   private def runClassified(spark: SparkSession,
-      joined: org.apache.spark.sql.DataFrame, fast: Boolean,
+      joined: org.apache.spark.sql.DataFrame, pinned: Boolean,
       targetFields: Seq[Attribute], idField: Attribute,
       hasUpdateOrInsert: Boolean): Seq[Row] = {
 
@@ -619,27 +530,26 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
       (matchedActions.zipWithIndex.collect { case (_: DeleteAction, i) => 100 + i } ++
         notMatchedBySourceActions.zipWithIndex.collect { case (_: DeleteAction, i) => 300 + i })
 
-    // fast path: ONE evaluation of the (key-pruned) join feeds the
-    // gate, the touched-id pin, and the replacement. Pinned with an
-    // EAGER localCheckpoint, not persist: the classified set is
-    // batch-sized (candidate rows + source), and a checkpoint truncates
-    // the lineage to a LogicalRDD leaf — every downstream consumer
-    // (gate, touched, replacement) then plans against a tiny plan,
-    // where a persist() would make each of them re-canonicalize the
-    // whole join subtree per CacheManager lookup (measured: the driver
-    // gap, not the jobs, dominated these entries).
+    // key-pruned join: ONE evaluation feeds the gate, the touched-id
+    // pin, and the replacement. Pinned with an EAGER localCheckpoint,
+    // not persist: the classified set is batch-sized (candidate rows +
+    // source), and a checkpoint truncates the lineage to a LogicalRDD
+    // leaf — every downstream consumer (gate, touched, replacement)
+    // then plans against a tiny plan, where a persist() would make each
+    // of them re-canonicalize the whole join subtree per CacheManager
+    // lookup (measured: the planning gap between jobs, not the jobs,
+    // dominated these entries). The full join stays unpinned: it spans the whole
+    // target, and a checkpoint would materialize it whole.
     val classified0 = joined.withColumn(ACT, act)
     graft.core.PlanDump.dump(classified0, "merge_classified")
-    val classified = if (fast) classified0.localCheckpoint(true) else classified0
+    val classified = if (pinned) classified0.localCheckpoint(true) else classified0
 
     // Cardinality gate (the MergeRowsExec / Delta contract): a target
     // row matched by MULTIPLE source rows would be updated/deleted more
     // than once — or, under our rewrite, emitted more than once — so a
     // merge carrying any WHEN MATCHED clause fails fast instead of
     // silently duplicating ids. O(matched) shuffle on the id key only;
-    // limit(1) short-circuits the probe (and, on the fast path,
-    // materializes the persisted classified join for every later
-    // consumer).
+    // limit(1) short-circuits the probe.
     if (matchedActions.nonEmpty) {
       val multi = classified.where(col(T).isNotNull && col(S).isNotNull)
         .groupBy(GraftBridge.column(idField)).count()
@@ -698,7 +608,7 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     val raw = classified
       .where(!col(ACT).isin(dropCodes.map(Int.box): _*))
       .select((targetFields.map(valueFor) :+
-        GraftBridge.column(idField).cast("string").as(GvdbRowLevel.Origin) :+
+        GraftBridge.column(idField).cast("string").as(Origin) :+
         col(ACT)).toIndexedSeq: _*)
     // Inserted rows (Origin null) re-enter the table's first-wins
     // dedup contract here — the group-CoW append bypasses
@@ -709,23 +619,18 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     // (dropDuplicates) then anti-join against the ids that SURVIVE the
     // merge (not the raw table: an id deleted by this same merge is
     // legitimately re-insertable).
-    val survivors = raw.where(col(GvdbRowLevel.Origin).isNotNull)
+    val survivors = raw.where(col(Origin).isNotNull)
     val inserted =
       if (notMatchedActions.isEmpty) None
-      else Some(raw.where(col(GvdbRowLevel.Origin).isNull)
+      else Some(raw.where(col(Origin).isNull)
         .dropDuplicates(VectorSchema.ID)
         .join(survivors.select(col(VectorSchema.ID)), Seq(VectorSchema.ID), "left_anti"))
-    if (fast) {
-      // only the MUTATED output rows enter the rewrite; untouched
-      // victim-file rows ride along inside groupCopyOnWriteMutated
-      val updatesOut = survivors.where(col(ACT).isin(updateCodes.map(Int.box): _*))
-      val mutatedOut = inserted.fold(updatesOut)(updatesOut.unionByName(_))
-        .drop(ACT, GvdbRowLevel.Origin)
-      GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutatedOut, touched, preImage)
-    } else {
-      val result = inserted.fold(raw)(survivors.unionByName(_)).drop(ACT)
-      GvdbRowLevel.rewrite(spark, root, result, touched)
-    }
+    // only the MUTATED output rows enter the rewrite; untouched
+    // victim-file rows ride along inside groupCopyOnWriteMutated
+    val updatesOut = survivors.where(col(ACT).isin(updateCodes.map(Int.box): _*))
+    val mutatedOut = inserted.fold(updatesOut)(updatesOut.unionByName(_))
+      .drop(ACT, Origin)
+    GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutatedOut, touched, preImage)
     Seq.empty
   }
 }
@@ -733,26 +638,22 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
 /** Plain holder for the UPDATE spec (see [[GvdbMergeSpec]]). */
 case class GvdbUpdateSpec(assignments: Seq[Assignment], condition: Option[Expression])
 
-/** SQL `UPDATE cat.ns.t SET ... WHERE ...` — file-group copy-on-write
-  * on an un-indexed table: the MATCHED rows are evaluated ONCE
-  * (persisted), their assignments plus the untouched rows of victim
-  * files re-enter via [[GvdbRowLevel.groupCopyOnWriteMutated]] — the
-  * legacy path projected the WHOLE table through the assignment CASE
-  * and evaluated the condition three times (result + pre/post-image
-  * touched ids). With an index tier present the table is replaced
-  * whole with index rebuild (the same vacuum-class cost contract as a
-  * MERGE carrying updates), unchanged. */
+/** SQL `UPDATE cat.ns.t SET ... WHERE ...` — file-group copy-on-write:
+  * the MATCHED rows are evaluated ONCE (pinned), and their assignments
+  * plus the untouched rows of victim files re-enter via
+  * [[GvdbRowLevel.groupCopyOnWriteMutated]]. One writer turn spans the
+  * read of the matched rows and the rewrite. */
 case class GvdbUpdateCommand(root: String, targetPlan: LogicalPlan,
     spec: GvdbUpdateSpec) extends LeafRunnableCommand {
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    val t = GraftBridge.ofRows(spark, targetPlan)
-    val idField = targetPlan.output.find(_.name == VectorSchema.ID).get
-    val condCol = spec.condition.map(GraftBridge.column).getOrElse(lit(true))
-    if (!GvdbRowLevel.indexed(spark, root)) {
-      // touched-first: matched rows only, evaluated once and pinned by
-      // an eager localCheckpoint (lineage-truncating — see the
-      // GvdbMergeCommand classified note)
+  override def run(spark: SparkSession): Seq[Row] =
+    GvdbRowLevel.withWriterLock(spark, root) {
+      val t = GraftBridge.ofRows(spark, targetPlan)
+      val idField = targetPlan.output.find(_.name == VectorSchema.ID).get
+      val condCol = spec.condition.map(GraftBridge.column).getOrElse(lit(true))
+      // matched rows only, evaluated once and pinned by an eager
+      // localCheckpoint (lineage-truncating — see the GvdbMergeCommand
+      // classified note)
       val matched = t.where(condCol).localCheckpoint(true)
       val fields = targetPlan.output.map { f =>
         GvdbRowLevel.assignCol(spec.assignments, f)
@@ -768,26 +669,8 @@ case class GvdbUpdateCommand(root: String, targetPlan: LogicalPlan,
         .select(GvdbRowLevel.assignCol(spec.assignments, idField)
           .cast("string").as(VectorSchema.ID)))
       GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutated, touched, preImage)
-      return Seq.empty
+      Seq.empty
     }
-    val fields = targetPlan.output.map { f =>
-      when(condCol, GvdbRowLevel.assignCol(spec.assignments, f))
-        .otherwise(GraftBridge.column(f))
-        .cast(GvdbRowLevel.relaxedType(f)).as(f.name)
-    }
-    val result = t.select((fields :+
-      GraftBridge.column(idField).cast("string").as(GvdbRowLevel.Origin)).toIndexedSeq: _*)
-    graft.core.PlanDump.dump(result, "update_result")
-    // pre-image ∪ post-image ids (see GvdbMergeCommand: an assigned id
-    // colliding with a RAW dead row must purge that row's file)
-    val touched = t.where(condCol)
-      .select(GraftBridge.column(idField).cast("string").as(VectorSchema.ID))
-      .unionByName(t.where(condCol)
-        .select(GvdbRowLevel.assignCol(spec.assignments, idField)
-          .cast("string").as(VectorSchema.ID)))
-    GvdbRowLevel.rewrite(spark, root, result, touched)
-    Seq.empty
-  }
 }
 
 /** Plain holder for the DELETE spec (see [[GvdbMergeSpec]]). */

@@ -226,7 +226,7 @@ class GvdbCatalog extends TableCatalog with SupportsNamespaces
       .filter(p => p.getName == oldIdent.name() || p.getName.startsWith(oldIdent.name() + "."))
       .foreach { p =>
         val newName = newIdent.name() + p.getName.stripPrefix(oldIdent.name())
-        fs.rename(p, new Path(nsPath(newIdent.namespace()), newName))
+        graft.core.HadoopFs.rename(fs, p, new Path(nsPath(newIdent.namespace()), newName))
       }
   }
 

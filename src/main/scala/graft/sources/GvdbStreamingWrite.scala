@@ -83,7 +83,7 @@ class GvdbStreamingWrite(spark: SparkSession, root: String, dimOpt: Option[Int],
     val out = fs.create(tmp, true)
     try out.write(epochId.toString.getBytes("UTF-8")) finally out.close()
     fs.delete(ledgerPath, false) // rename won't replace; a crash here = no record
-    fs.rename(tmp, ledgerPath)
+    graft.core.HadoopFs.rename(fs, tmp, ledgerPath)
     ()
   }
 

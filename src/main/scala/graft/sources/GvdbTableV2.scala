@@ -658,7 +658,7 @@ class GvdbMicroBatchStream(spark: SparkSession, root: String,
     val out = logFs.create(tmp, true)
     try out.write(GvdbSourceOffset.filesJson(files.toSeq).getBytes("UTF-8")) finally out.close()
     logFs.delete(p, false)
-    logFs.rename(tmp, p)
+    graft.core.HadoopFs.rename(logFs, tmp, p)
     ()
   }
 

@@ -9,9 +9,10 @@ import graft.table.VectorTable
 
 /** Keyed upsert over a gvdb table: batch rows REPLACE same-id table
   * rows, new ids insert — the `vdb_upsert` semantics (tombstone-free:
-  * a file-group copy-on-write through [[GvdbRowLevel.rewrite]], so
-  * only the part files holding replaced ids rewrite; an all-new batch
-  * is a pure append). This is the streaming UPDATE-mode sink's apply
+  * a file-group copy-on-write through
+  * [[GvdbRowLevel.groupCopyOnWriteMutated]], so only the part files
+  * holding replaced ids rewrite; an all-new batch is a pure append).
+  * This is the streaming UPDATE-mode sink's apply
   * (`GvdbStreamingWrite` with `upsert`) and the batch
   * `.option("upsert", "true")` write path.
   *
@@ -25,60 +26,32 @@ import graft.table.VectorTable
 object GvdbUpsert {
 
   def apply(spark: SparkSession, root: String, data: DataFrame,
-      dimOpt: Option[Int]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.WriterLock.withLock(fs, root) {
-      val shaped = GvdbWrite.shape(data).dropDuplicates(VectorSchema.ID)
-      val table = new VectorTable(spark, root, dimOpt.getOrElse(1))
-      val indexed = table.annIndexMeta.isDefined || table.hnswIndexMeta.isDefined ||
-        table.ivfPqIndexMeta.isDefined || table.bqIndexMeta.isDefined
-      if (!table.exists) {
-        GvdbWrite.insert(spark, root, shaped, overwrite = false, dimOpt)
-      } else if (!indexed) {
-        // touched-first fast path (guide §1.2): ONE persisted
-        // batch-side left join classifies every batch row as
-        // update-or-insert; the whole-table `copies` projection is
-        // never built — untouched victim-file rows ride along inside
-        // groupCopyOnWriteMutated. The legacy path below evaluated the
-        // table↔batch join four times (copies, updates, inserts, and
-        // again per replacement-union branch).
-        val E = "__gvdb_exists"
-        // eager localCheckpoint, not persist: batch-sized, and the
-        // lineage truncation keeps every consumer's plan tiny (see the
-        // GvdbMergeCommand classified note)
-        val flagged = shaped.join(
-            table.df.select(col(VectorSchema.ID), lit(1).as(E)),
-            Seq(VectorSchema.ID), "left")
-          .localCheckpoint(true)
-        val mutated = flagged.drop(E)
-        graft.core.PlanDump.dump(mutated, "upsert_result")
-        // touched = every batch id: pre-image (replaced rows' files
-        // rewrite) and post-image (a dead raw duplicate of an
-        // inserted id purges with its file) coincide here; ride-along
-        // excludes only the REPLACED (live-matched) pre-images
-        val preImage = flagged.where(col(E) === 1).select(VectorSchema.ID)
-        GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutated,
-          flagged.select(VectorSchema.ID), preImage)
-      } else {
-        val ids = Seq(VectorSchema.ID)
-        val tgt = table.df.select(VectorSchema.ID, VectorSchema.METADATA,
-          VectorSchema.EMBEDDING)
-        val copies = tgt.join(shaped.select(VectorSchema.ID), ids, "left_anti")
-          .withColumn(GvdbRowLevel.Origin, col(VectorSchema.ID))
-        val updates = shaped.join(tgt.select(VectorSchema.ID), ids, "left_semi")
-          .withColumn(GvdbRowLevel.Origin, col(VectorSchema.ID))
-        val inserts = shaped.join(tgt.select(VectorSchema.ID), ids, "left_anti")
-          .withColumn(GvdbRowLevel.Origin,
-            lit(null).cast(org.apache.spark.sql.types.StringType))
-        // touched = every batch id: pre-image (replaced rows' files
-        // rewrite) and post-image (a dead raw duplicate of an inserted
-        // id purges with its file) coincide here
-        val result = copies.unionByName(updates).unionByName(inserts)
-        graft.core.PlanDump.dump(result, "upsert_result")
-        GvdbRowLevel.rewrite(spark, root, result,
-          shaped.select(VectorSchema.ID))
-      }
+      dimOpt: Option[Int]): Unit = GvdbRowLevel.withWriterLock(spark, root) {
+    val shaped = GvdbWrite.shape(data).dropDuplicates(VectorSchema.ID)
+    val table = new VectorTable(spark, root, dimOpt.getOrElse(1))
+    if (!table.exists) {
+      GvdbWrite.insert(spark, root, shaped, overwrite = false, dimOpt)
+    } else {
+      // ONE batch-side left join classifies every batch row as
+      // update-or-insert; untouched victim-file rows ride along inside
+      // groupCopyOnWriteMutated
+      val E = "__gvdb_exists"
+      // eager localCheckpoint, not persist: batch-sized, and the
+      // lineage truncation keeps every consumer's plan tiny (see the
+      // GvdbMergeCommand classified note)
+      val flagged = shaped.join(
+          table.df.select(col(VectorSchema.ID), lit(1).as(E)),
+          Seq(VectorSchema.ID), "left")
+        .localCheckpoint(true)
+      val mutated = flagged.drop(E)
+      graft.core.PlanDump.dump(mutated, "upsert_result")
+      // touched = every batch id: pre-image (replaced rows' files
+      // rewrite) and post-image (a dead raw duplicate of an
+      // inserted id purges with its file) coincide here; ride-along
+      // excludes only the REPLACED (live-matched) pre-images
+      val preImage = flagged.where(col(E) === 1).select(VectorSchema.ID)
+      GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutated,
+        flagged.select(VectorSchema.ID), preImage)
     }
   }
 }

@@ -174,7 +174,7 @@ private[graft] object IdBlooms {
     val tmp = new Path(root + ".blooms__rewrite")
     keep.write.mode("overwrite").parquet(tmp.toString)
     fs.delete(dir(root), true)
-    fs.rename(tmp, dir(root))
+    graft.core.HadoopFs.rename(fs, tmp, dir(root))
     bLive.destroy()
     ()
   }

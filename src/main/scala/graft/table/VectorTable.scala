@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{VectorSchema, WriterLock}
+import graft.core.{HadoopFs, VectorSchema, WriterLock}
 
 /** A named, Parquet-backed vector table — the Spark-native counterpart of
   * the reference's one-`.duckdb`-file-per-name model (`DuckVDB`,
@@ -68,7 +68,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
     val tmp = new Path(root + "__indexing")
     withExtracts(indexed).write.mode("overwrite").parquet(tmp.toString)
     fs.delete(hadoopPath, true)
-    fs.rename(tmp, hadoopPath)
+    HadoopFs.rename(fs, tmp, hadoopPath)
     fs.delete(snapsRoot, true) // rewrite: snapshots expire (see snapshot())
     // the rewrite materialized the MoR view (df applies tombstones), so
     // the deletes are now physical — the tombstone table must fold with
@@ -84,6 +84,14 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
     spark.conf.set("spark.graft.ann.seed", seed.toString)
     this
   }
+
+  /** `rows` with the LSH bucket column for the persisted ANN index
+    * (hashed at dimension `d`), replacing any stale one; unchanged
+    * when the table has no ANN index. Every append site calls this, so
+    * the bucket prefilter never misses a written row. */
+  private[graft] def withAnnBuckets(rows: DataFrame, d: => Int): DataFrame =
+    annIndexMeta.fold(rows)(m => rows.withColumn(VectorSchema.ANN_BUCKETS,
+      graft.functions.LshBucketsExpr(col(VectorSchema.EMBEDDING), d, m.tables, m.bits, m.seed)))
 
   /** Pins this session's `spark.graft.ann.*` confs from the PERSISTED
     * index metadata. `buildAnnIndex` pins the building session; any
@@ -202,7 +210,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
         val tmp = new Path(root + ".hnsw__compacting")
         merged.write.mode("overwrite").parquet(tmp.toString)
         fs.delete(hnswGraphPath, true)
-        fs.rename(tmp, hnswGraphPath)
+        HadoopFs.rename(fs, tmp, hnswGraphPath)
         writeHnswMeta(meta.copy(
           segments = meta.segments + graft.ops.Hnsw.autoSegments(nRebuild)))
       }
@@ -754,7 +762,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
       val tmp = new Path(root + "__vacuum")
       withExtracts(df).write.mode("overwrite").parquet(tmp.toString)
       fs.delete(hadoopPath, true)
-      fs.rename(tmp, hadoopPath)
+      HadoopFs.rename(fs, tmp, hadoopPath)
       fs.delete(tombPath, true)
       tombCountCache = Some((0L, 0L)) // no tombPath → signature 0
       expireSnapshots() // data files rewritten: retention-zero expiry
@@ -763,14 +771,24 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
       // the active tier over the now-physical live set, or the probe
       // under-returns silently (k − deleted rows). A vacuum is already
       // a full data rewrite; the index rebuild is the same
-      // proportional cost. At most one branch fires (single slot).
-      hnswIndexMeta.foreach(meta =>
-        buildHnswIndex(m = meta.m, efConstruction = meta.efConstruction))
-      ivfPqIndexMeta.foreach(meta => buildIvfPqIndex(meta.nCells, meta.m,
-        meta.pqK, meta.nProbe, meta.shortlistFactor))
-      bqIndexMeta.foreach(meta => buildBqIndex(meta.coarseFactor, meta.fineFactor))
+      // proportional cost.
+      rebuildIndex()
     }
     this
+  }
+
+  /** Rebuilds the active graph/code tier (HNSW, IVF-PQ or BQ) over the
+    * live rows with its persisted parameters — the rebuild point of
+    * every data rewrite that replaces rows the tier has indexed
+    * (vacuum, the row-level group rewrite). At most one branch fires
+    * (single slot); the LSH tier needs none, its buckets live in the
+    * rows. */
+  private[graft] def rebuildIndex(): Unit = {
+    hnswIndexMeta.foreach(meta =>
+      buildHnswIndex(m = meta.m, efConstruction = meta.efConstruction))
+    ivfPqIndexMeta.foreach(meta => buildIvfPqIndex(meta.nCells, meta.m,
+      meta.pqK, meta.nProbe, meta.shortlistFactor))
+    bqIndexMeta.foreach(meta => buildBqIndex(meta.coarseFactor, meta.fineFactor))
   }
 
   /** In-place small-file compaction — the maintenance half of a CDC
@@ -840,12 +858,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
             lit(s"embedding dim mismatch: expected $dim, got "),
             size(col(VectorSchema.EMBEDDING)).cast("string")))))
     // keep the persisted ANN index complete across inserts
-    val indexed = annIndexMeta match {
-      case Some(m) => checked.withColumn(VectorSchema.ANN_BUCKETS,
-        graft.functions.LshBucketsExpr(col(VectorSchema.EMBEDDING), dim, m.tables, m.bits, m.seed))
-      case None => checked
-    }
-    val deduped = indexed.dropDuplicates(VectorSchema.ID)
+    val deduped = withAnnBuckets(checked, dim).dropDuplicates(VectorSchema.ID)
     // anti-join unconditionally: against an empty table it is an
     // identity with a near-zero build side, and skipping it would cost
     // a driver-side existence job (df.isEmpty) on EVERY insert — at

@@ -67,6 +67,55 @@ class WriterLockSpec extends SparkSpec with Matchers {
     new VectorTable(spark, root, 2).drop()
   }
 
+  test("MERGE and UPDATE take the writer lock before reading any row") {
+    val wh = Files.createTempDirectory("graft-lockspec-rowlevel").toString
+    spark.conf.set("spark.sql.catalog.wlc", "graft.sources.GvdbCatalog")
+    spark.conf.set("spark.sql.catalog.wlc.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS wlc.rl")
+    spark.sql("CREATE TABLE wlc.rl.t (id string, metadata string, embedding array<float>) USING gvdb")
+    rows("w", 0 until 5).createOrReplaceTempView("lock_base")
+    spark.sql("INSERT INTO wlc.rl.t SELECT * FROM lock_base")
+    val root = s"$wh/rl/t"
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // every row the merge source or the update predicate reads passes
+    // through this UDF, so a read before the lock shows as a call
+    WriterLockSpec.reads.set(0)
+    spark.udf.register("lock_probe", (s: String) => { WriterLockSpec.reads.incrementAndGet(); s })
+    rows("w", 0 until 3).selectExpr("lock_probe(id) AS id", "metadata", "embedding")
+      .createOrReplaceTempView("lock_src")
+    val merge = """MERGE INTO wlc.rl.t t USING lock_src c ON t.id = c.id
+      WHEN MATCHED THEN UPDATE SET metadata = '{"m":1}'"""
+    val update = """UPDATE wlc.rl.t SET metadata = '{"u":1}' WHERE lock_probe(id) = 'w4'"""
+    def lockError(t: Throwable): Boolean =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[WriterLock.ConcurrentWriteException])
+
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val holder = new Thread(() => WriterLock.withLock(fs, root) {
+      entered.countDown()
+      release.await()
+    })
+    holder.start()
+    entered.await()
+    try {
+      lockError(intercept[Exception](spark.sql(merge))) shouldBe true
+      WriterLockSpec.reads.get shouldBe 0
+      lockError(intercept[Exception](spark.sql(update))) shouldBe true
+      WriterLockSpec.reads.get shouldBe 0
+    } finally {
+      release.countDown()
+      holder.join()
+    }
+    // the lock released, both commit
+    spark.sql(merge)
+    spark.sql(update)
+    WriterLockSpec.reads.get should be > 0
+    spark.sql("SELECT id FROM wlc.rl.t WHERE metadata <> '{}' ORDER BY id").collect()
+      .map(_.getString(0)) shouldBe Array("w0", "w1", "w2", "w4")
+    spark.sql("DROP TABLE wlc.rl.t")
+  }
+
   test("a stale marker from a crashed writer is broken, not honored forever") {
     val root = freshRoot("stale")
     rows("w", 0 until 3).write.format("gvdb").option("dim", "2")
@@ -85,4 +134,10 @@ class WriterLockSpec extends SparkSpec with Matchers {
     lock.delete()
     new VectorTable(spark, root, 2).drop()
   }
+}
+
+object WriterLockSpec {
+  /** Rows read by the `lock_probe` UDF (local mode: executors share
+    * this JVM). */
+  val reads = new java.util.concurrent.atomic.AtomicInteger(0)
 }
