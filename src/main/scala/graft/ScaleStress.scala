@@ -302,6 +302,13 @@ object ScaleStress {
           spark.conf.unset("spark.graft.graph.localEdgeMax")
           spark.conf.unset("spark.graft.cc.localEdgeMax")
         }
+        // each run builds its own duplicate-cluster labels: a memo left
+        // by the other run would hand the forced-distributed run the
+        // local-finish components (dedup_components would compare a
+        // table with itself)
+        SparkEntry.componentsMemo.synchronized {
+          SparkEntry.componentsMemo.remove((spark, src)).foreach(_.unpersist(blocking = false))
+        }
         try {
           val t0 = System.nanoTime()
           val rows = SparkEntry.queries(name)(spark, src).collect()

@@ -20,6 +20,12 @@ import graft.table.VectorTable
   * sort+limit as `TakeOrderedAndProject` (per-partition top-k heaps,
   * driver merge) — the same Top-N strategy DuckDB uses, but
   * partition-parallel, so it scales out with executors.
+  *
+  * On a table with a persisted HNSW index, an unfiltered query first
+  * probes the graph on its own (one map-only job that collects at most
+  * k + tombstones candidate ids), then runs the same lifecycle over the
+  * rows whose id hashes to a candidate — one scan, no join. A filtered
+  * query stays on the exact lifecycle and never reads the index.
   */
 class VectorDB(
     val spark: SparkSession,
@@ -84,10 +90,14 @@ class VectorDB(
       indexFilteredProbe: Boolean = false): Dataset[Result] = {
     import spark.implicits._
     require(vec.length == dim, s"query dim ${vec.length} != table dim $dim")
+    // only a query that can take an index route looks at the index
+    // tiers: a filtered exact query never touches them
+    val indexable = useIndex && (filters.isEmpty || indexFilteredProbe)
     // tombstone-widened probe width, CAPPED at WidenCap·k: None past
-    // the cap routes the query down the exact path (see probeWidth)
-    val widened = if (useIndex && filters.isEmpty) probeWidth(k) else None
-    table.hnswGraph match {
+    // the cap routes the query down the exact path (see probeWidth).
+    // Lazy: an un-indexed table never sizes a probe.
+    lazy val widened = if (filters.isEmpty) probeWidth(k) else None
+    (if (indexable) table.hnswGraph else None) match {
       case Some(graph) if widened.isDefined => indexedKnn(graph, vec, k, widened.get)
       // OPT-IN extension past the reference contract: route a FILTERED
       // query through the selectivity-adaptive graph probe
@@ -97,26 +107,26 @@ class VectorDB(
       // debt: the eligible set is drawn from the live view, so dead
       // rows are ineligible and the 1/selectivity oversampling prices
       // them — no unbounded widening here.)
-      case Some(graph) if useIndex && indexFilteredProbe =>
+      case Some(graph) if indexFilteredProbe =>
         indexedFilteredKnn(graph, vec, k, filters, useVariant)
       // the other two persisted tiers (single index slot — at most one
       // of the three exists): same contract as the HNSW route —
       // unfiltered queries probe the index, filtered queries stay
       // exact (the reference's own index scope, duckvdb.py:37-45)
       // unless the caller opts into the filtered probe below
-      case None if widened.isDefined && table.ivfPqIndexMeta.isDefined =>
+      case None if indexable && table.ivfPqIndexMeta.isDefined && widened.isDefined =>
         val (ix, codes) = table.ivfPqIndex.get
         ivfpqKnn(ix, codes, vec, k, widened.get)
-      case None if widened.isDefined && table.bqIndexMeta.isDefined =>
+      case None if indexable && table.bqIndexMeta.isDefined && widened.isDefined =>
         bqKnn(table.bqCodes.get, vec, k, widened.get)
       // tier parity for the OPT-IN filtered probe: cell-intersected
       // eligible-set search for IVF-PQ, code-side prefilter for BQ —
       // same contract as the HNSW route (eligible set from the live
       // filtered view, so tombstoned/ineligible rows never score and
       // approximation touches recall only, never filter correctness)
-      case None if useIndex && indexFilteredProbe && table.ivfPqIndexMeta.isDefined =>
+      case None if indexable && indexFilteredProbe && table.ivfPqIndexMeta.isDefined =>
         ivfpqFilteredKnn(vec, k, filters, useVariant)
-      case None if useIndex && indexFilteredProbe && table.bqIndexMeta.isDefined =>
+      case None if indexable && indexFilteredProbe && table.bqIndexMeta.isDefined =>
         bqFilteredKnn(vec, k, filters, useVariant)
       case _ =>
         val compiled =
@@ -226,28 +236,33 @@ class VectorDB(
     queryByVectors(embedded, k, filters, useVariant, useIndex)
   }
 
-  /** The persisted-index probe: beam-search every graph segment for the
-    * query (map-only over the graph table — index and vectors
-    * co-reside, so no corpus distance pass and no embedding-column
-    * scan), then join the k surfaced surrogate ids back to the table
-    * for metadata. The metadata fetch is a broadcast of k ids against
-    * an id+metadata column-pruned scan; distances come from the probe's
-    * exact-kernel rerank (portable-rounded to 4 decimals — the engine's
-    * cross-engine distance contract). A surrogate collision merely adds
-    * a spurious candidate that the final distance-ordered limit drops;
-    * tombstoned rows drop at the metadata join (their ids left the
-    * table view). */
+  /** The persisted-index probe, in two jobs' worth of work:
+    * [[graft.ops.Hnsw.probeNearest]] beam-searches every graph segment
+    * for the query (map-only over the graph table — index and vectors
+    * co-reside, so no corpus distance pass) and collects at most
+    * `kProbe` surrogate ids; then ONE scan of the live view keeps the
+    * rows whose `xxhash64(id)` is among them and ranks those by the
+    * engine kernel ([[ranked]]). A surrogate collision merely adds a
+    * spurious candidate that the final distance-ordered limit drops;
+    * tombstoned rows are not in the live view, which is why the probe
+    * is widened by the tombstone count. */
   private def indexedKnn(
       graph: DataFrame, vec: Array[Float], k: Int, kProbe: Int): Dataset[Result] = {
+    val hits = ops.Hnsw.probeNearest(graph, vec, kProbe, m = table.hnswIndexMeta.get.m)
+    ranked(table.df.where(xxhash64(col(VectorSchema.ID)).isin(hits.toSeq: _*)), vec, k)
+  }
+
+  /** The answer over candidate rows of the table view: the exact-kernel
+    * distance, portable-rounded to 4 decimals (the engine's
+    * cross-engine distance contract), then the reference's
+    * SELECT DISTINCT, order by (distance, id) and limit k. */
+  private def ranked(rows: DataFrame, vec: Array[Float], k: Int): Dataset[Result] = {
     import spark.implicits._
-    val meta = table.hnswIndexMeta.get
-    val q = Seq((0L, vec)).toDF("vec_id", "embedding")
-    val hits = ops.Hnsw.probeGraph(graph, q, kProbe, m = meta.m, excludeSelf = false)
-      .select(col("neighbor_id").as("__h"), col("distance"))
-    table.df
-      .withColumn("__h", xxhash64(col(VectorSchema.ID)))
-      .join(broadcast(hits), Seq("__h"))
-      .select(col(VectorSchema.ID), col(VectorSchema.METADATA), col("distance"))
+    rows
+      .select(col(VectorSchema.ID), col(VectorSchema.METADATA),
+        graft.functions.RoundPortableExpr.r(
+          VectorFunctions.cosineDistance(col(VectorSchema.EMBEDDING), typedlit(vec)), 4)
+          .as("distance"))
       .dropDuplicates()
       .orderBy(col("distance").asc, col(VectorSchema.ID).asc)
       .limit(k)
@@ -283,17 +298,8 @@ class VectorDB(
         nProbe = meta.nProbe, shortlistFactor = meta.shortlistFactor,
         nProbeMax = math.min(ix.nCells, 2 * meta.nProbe), adaptRatio = 1.5)
       .select(col("neighbor_id").as("__h"))
-    live
-      .withColumn("__h", xxhash64(col(VectorSchema.ID)))
-      .join(broadcast(hits), Seq("__h"))
-      .select(col(VectorSchema.ID), col(VectorSchema.METADATA),
-        graft.functions.RoundPortableExpr.r(
-          VectorFunctions.cosineDistance(col(VectorSchema.EMBEDDING), typedlit(vec)), 4)
-          .as("distance"))
-      .dropDuplicates()
-      .orderBy(col("distance").asc, col(VectorSchema.ID).asc)
-      .limit(k)
-      .as[Result]
+    ranked(live.withColumn("__h", xxhash64(col(VectorSchema.ID)))
+      .join(broadcast(hits), Seq("__h")), vec, k)
   }
 
   /** The persisted BQ probe: the Hamming → sign-asymmetric → exact
@@ -350,17 +356,8 @@ class VectorDB(
         eligible = corpus.select(col("vec_id")),
         nProbe = meta.nProbe, shortlistFactor = meta.shortlistFactor)
       .select(col("neighbor_id").as("__h"))
-    filteredView
-      .withColumn("__h", xxhash64(col(VectorSchema.ID)))
-      .join(broadcast(hits), Seq("__h"))
-      .select(col(VectorSchema.ID), col(VectorSchema.METADATA),
-        graft.functions.RoundPortableExpr.r(
-          VectorFunctions.cosineDistance(col(VectorSchema.EMBEDDING), typedlit(vec)), 4)
-          .as("distance"))
-      .dropDuplicates()
-      .orderBy(col("distance").asc, col(VectorSchema.ID).asc)
-      .limit(k)
-      .as[Result]
+    ranked(filteredView.withColumn("__h", xxhash64(col(VectorSchema.ID)))
+      .join(broadcast(hits), Seq("__h")), vec, k)
   }
 
   /** Filtered probe through the persisted BQ tier: a CODE-SIDE
@@ -512,8 +509,9 @@ object VectorDB {
     * the undeleted probe (~1.0 s) — and the exact fallback costs only
     * ~1.3× that, while the uncapped probe grows with debt (2.1× by
     * kProbe = 10 240 = 5% of the corpus, past the exact scan). Latency
-    * is the lesser hazard, though: kProbe candidates are COLLECTED and
-    * broadcast in the metadata join, and the per-segment beam holds
+    * is the lesser hazard, though: kProbe candidates are COLLECTED to
+    * the driver and planted in the live scan's IN-list, and the
+    * per-segment beam holds
     * ≥ kProbe entries per query — both linear in delete debt if
     * unbounded (a 10%-deleted 1 B-row table would probe for 100 M
     * candidates). Since results are identical on both sides of the cap

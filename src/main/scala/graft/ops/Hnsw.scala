@@ -2,9 +2,10 @@ package graft.ops
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructType}
 
 import graft.functions.{RoundPortableExpr, VectorFunctions}
 
@@ -229,16 +230,59 @@ object Hnsw {
       if (l > topLevel) { entry = node; topLevel = l }
     }
 
-    /** Top-k node ids for query `q` with beam `efSearch` (≥ k). */
-    def search(q: Array[Float], k: Int, efSearch: Int): Array[Long] = {
+    /** Top-k (distance, node id) pairs for query `q` with beam
+      * `efSearch` (≥ k), nearest first. */
+    def searchScored(q: Array[Float], k: Int, efSearch: Int): Array[(Double, Long)] = {
       if (entry < 0) return Array.empty
       var ep = entry
       var lev = topLevel
       while (lev > 0) { ep = greedy(q, ep, lev); lev -= 1 }
       searchLayer(q, ep, math.max(efSearch, k), 0)
-        .take(k).map { case (_, n) => ids(n) }.toArray
+        .take(k).map { case (d, n) => (d, ids(n)) }.toArray
     }
+
+    /** Top-k node ids for query `q` with beam `efSearch` (≥ k). */
+    def search(q: Array[Float], k: Int, efSearch: Int): Array[Long] =
+      searchScored(q, k, efSearch).map(_._2)
   }
+
+  /** One persisted graph row: (seg, id, adj, emb). */
+  private type GraphRow = (Int, Long, Array[Array[Long]], Array[Float])
+
+  /** The schema [[buildGraph]] writes. Readers pass it to
+    * `spark.read.schema` — a schema-less parquet read runs a
+    * footer-inference Spark job before the query's own action. */
+  val GraphSchema: StructType = new StructType()
+    .add("seg", IntegerType)
+    .add("id", LongType)
+    .add("adj", ArrayType(ArrayType(LongType)))
+    .add("emb", ArrayType(FloatType))
+
+  /** A persisted graph directory, read with [[GraphSchema]]. */
+  def readGraph(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(GraphSchema).parquet(path)
+
+  private def graphRows(graph: DataFrame): Dataset[GraphRow] = {
+    val spark = graph.sparkSession
+    import spark.implicits._
+    graph.select(col("seg").as("_1"), col("id").as("_2"), col("adj").as("_3"), col("emb").as("_4"))
+      .as[GraphRow]
+  }
+
+  /** Restores one segment's graph from its persisted rows. */
+  private def restoreSegment(rows: Array[GraphRow], m: Int): SegmentIndex = {
+    val sorted = rows.sortBy(_._2)
+    val idx = new SegmentIndex(sorted.map(_._2), sorted.map(_._4), m, efConstruction = m)
+    idx.restore(sorted.map(_._3))
+    idx
+  }
+
+  /** Every segment of one partition of graph rows, restored whole:
+    * parquet preserves the build's file-per-segment layout, but a
+    * reader may coalesce files — grouping by seg restores each graph
+    * whole regardless of the read partitioning. */
+  private def restoredSegments(rows: Iterator[GraphRow], m: Int): Iterator[SegmentIndex] =
+    rows.toArray.groupBy(_._1).valuesIterator.map(restoreSegment(_, m))
 
   /** Build the per-partition index over an iterator of (id, vec) and
     * surface each broadcast query's local top-k ids. */
@@ -338,13 +382,16 @@ object Hnsw {
       }.toDF("seg", "id", "adj", "emb")
   }
 
-  /** Probe a persisted graph. The segment rows carry their vectors
-    * (the Lucene segment layout — index and data co-reside), so the
-    * probe is MAP-ONLY over the graph table: one shuffle-free pass
-    * restores each segment's adjacency and beam-searches the broadcast
-    * panel; the only join is the O(queries · segments · k) kernel
-    * rerank against the surfaced candidate ids. `m` must match the
-    * build. */
+  /** Probe a persisted graph for a query PANEL. The segment rows carry
+    * their vectors (the Lucene segment layout — index and data
+    * co-reside), so the probe is MAP-ONLY over the graph table: one
+    * shuffle-free pass restores each segment's adjacency and
+    * beam-searches the broadcast panel; the surfaced
+    * (query, candidate) pairs are then re-scored by the exact kernel
+    * and ranked per query ([[rerank]]: a join back to the graph's
+    * vectors and a window). A single serving query needs none of that
+    * tail — [[probeNearest]] returns its candidate ids in one job.
+    * `m` must match the build. */
   def probeGraph(
       graph: DataFrame, queries: DataFrame, k: Int,
       m: Int = 16, efSearch: Int = 96,
@@ -355,17 +402,8 @@ object Hnsw {
     val panel = queries.select(col(idCol), col(embCol)).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
     val bc = spark.sparkContext.broadcast(panel)
-    val segRows = graph
-      .select(col("seg").as("_1"), col("id").as("_2"), col("adj").as("_3"), col("emb").as("_4"))
-      .as[(Int, Long, Array[Array[Long]], Array[Float])]
-    val pairs = segRows.mapPartitions { it =>
-      // parquet preserves the build's file-per-segment layout, but a
-      // reader may coalesce files — group by seg so each graph
-      // restores whole regardless of the read partitioning
-      it.toArray.groupBy(_._1).iterator.flatMap { case (_, rows) =>
-        val sorted = rows.sortBy(_._2)
-        val idx = new SegmentIndex(sorted.map(_._2), sorted.map(_._4), m, efConstruction = m)
-        idx.restore(sorted.map(_._3))
+    val pairs = graphRows(graph).mapPartitions { it =>
+      restoredSegments(it, m).flatMap { idx =>
         bc.value.iterator.flatMap { case (qid, qv) =>
           // +1 under self-exclusion: see searchTopK
           idx.search(qv, k + (if (excludeSelf) 1 else 0), efSearch)
@@ -375,6 +413,25 @@ object Hnsw {
     }.toDF("query_id", "neighbor_id")
     val vectors = graph.select(col("id").as(idCol), col("emb").as(embCol))
     rerank(pairs, queries, vectors, k, idCol, embCol, excludeSelf)
+  }
+
+  /** The serving probe: beam-searches every segment of a persisted
+    * graph for ONE query vector and returns the surrogate ids of the
+    * `k` nearest candidates, nearest first. Candidates are ranked on
+    * the driver by the distance the segment search already computed
+    * (ties on id), so the whole probe is one map-only job over the
+    * graph and at most `k` ids leave it — no vector join, no window,
+    * no broadcast. Callers re-score the returned ids with the engine
+    * kernel against their own rows. `m` must match the build. */
+  def probeNearest(graph: DataFrame, q: Array[Float], k: Int,
+      m: Int = 16, efSearch: Int = 96): Array[Long] = {
+    val spark = graph.sparkSession
+    import spark.implicits._
+    graphRows(graph)
+      .mapPartitions(it => restoredSegments(it, m).flatMap(_.searchScored(q, k, efSearch).iterator))
+      .collect()
+      .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+      .take(k).map(_._2)
   }
 
   /** Metadata-FILTERED probe with selectivity-adaptive oversampling —
@@ -462,17 +519,12 @@ object Hnsw {
     val fan = queries
       .select(explode(lit(segIds)).as("seg"), col(idCol).as("qid"), col(embCol).as("qv"))
       .as[(Int, Long, Array[Float])]
-    val segRows = graph
-      .select(col("seg"), col("id"), col("adj"), col("emb"))
-      .as[(Int, Long, Array[Array[Long]], Array[Float])]
-    val pairs = segRows.groupByKey(_._1).cogroup(fan.groupByKey(_._1)) {
+    val pairs = graphRows(graph).groupByKey(_._1).cogroup(fan.groupByKey(_._1)) {
       (_, rowIt, qIt) =>
         val rows = rowIt.toArray
         if (rows.isEmpty) Iterator.empty
         else {
-          val sorted = rows.sortBy(_._2)
-          val idx = new SegmentIndex(sorted.map(_._2), sorted.map(_._4), m, efConstruction = m)
-          idx.restore(sorted.map(_._3))
+          val idx = restoreSegment(rows, m)
           qIt.flatMap { case (_, qid, qv) =>
             // +1 under self-exclusion: see searchTopK
             idx.search(qv, k + (if (excludeSelf) 1 else 0), efSearch)
@@ -523,7 +575,7 @@ object Hnsw {
   def compactIfNeeded(spark: org.apache.spark.sql.SparkSession, graphPath: String,
       maxRows: Long, mergeAt: Int,
       m: Int = 16, efConstruction: Int = 128): Boolean = {
-    val graph = spark.read.parquet(graphPath)
+    val graph = readGraph(spark, graphPath)
     val sizes = graph.groupBy(col("seg")).agg(count(lit(1)).as("n")).collect()
       .map(r => (r.getInt(0), r.getLong(1)))
     val small = sizes.filter(_._2 <= maxRows)

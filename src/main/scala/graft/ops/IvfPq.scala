@@ -130,9 +130,10 @@ object IvfPq {
 
   /** Reads a [[persistCodes]] table back in the canonical
     * (vec_id, cell, code) column order (`cell`, the partition column,
-    * comes back last otherwise). */
+    * comes back last otherwise). The writer's schema is passed, so the
+    * read runs no footer-inference job and `cell` comes back an int. */
   def loadCodes(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).select(col("vec_id"), col("cell").cast("int"), col("code"))
+    spark.read.schema(codeSchema).parquet(path).select(col("vec_id"), col("cell"), col("code"))
 
   /** Map-only encode of `vectors` against an EXISTING index: each row
     * is assigned its nearest coarse cell and residual-PQ-encoded with

@@ -165,51 +165,6 @@ class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** Distinct tombstoned ids of the root's merge-on-read side table —
-    * the probe-widening bound. Zero-cost (one existence check) when no
-    * delete ever ran; one id-column distinct-count job otherwise. */
-  private def tombstoneDebt(root: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(root + ".tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L
-    else scala.util.Try(
-      spark.read.parquet(p.toString)
-        .select(graft.core.VectorSchema.ID).distinct().count()).getOrElse(0L)
-  }
-
-  private def sidecarText(path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      Some(try scala.io.Source.fromInputStream(in).mkString finally in.close())
-    }
-  }
-
-  /** `m` from the table's persisted HNSW meta sidecar, if the scan
-    * root has one (the probe must search with the build's `m` — levels
-    * derive from it). */
-  private def hnswM(root: String): Option[Int] =
-    sidecarText(root + ".hnsw_index.json").flatMap(txt =>
-      """"m"\s*:\s*(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt))
-
-  /** (nProbe, shortlistFactor) from an IVF-PQ meta sidecar — the
-    * build-pinned probe defaults the recall gates were measured at. */
-  private def ivfpqParams(root: String): Option[(Int, Int)] =
-    sidecarText(root + ".ivfpq_index.json").flatMap(txt =>
-      """"nProbe"\s*:\s*(\d+).*"shortlistFactor"\s*:\s*(\d+)""".r
-        .findFirstMatchIn(txt).map(g => (g.group(1).toInt, g.group(2).toInt)))
-
-  /** (coarseFactor, fineFactor) from a BQ meta sidecar. */
-  /** BQ tier parameters INCLUDING the centering mean — read through
-    * the table's own meta parser so the consult probes centered codes
-    * with a centered query (the sidecar's contract). */
-  private def bqParams(root: String): Option[(Int, Int, Seq[Float])] =
-    if (sidecarText(root + ".bq_index.json").isEmpty) None
-    else new graft.table.VectorTable(spark, root, 1).bqIndexMeta
-      .map(m => (m.coarseFactor, m.fineFactor, m.mean))
-
   /** Probes whichever persisted index tier the scan root carries
     * (.hnsw graph, .ivfpq codes+artifact, .bq sign codes — the single
     * index slot, so at most one exists) for the plan's query literal
@@ -218,7 +173,9 @@ class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * column — the key the surrogates were built over — or no literal
     * limit). The probe itself runs here, at planning time, exactly
     * like a B-tree consult: k + 8 candidates (slack absorbs rounding
-    * ties at the k boundary), one tiny job over the index artifact. */
+    * ties at the k boundary), one tiny job over the index artifact.
+    * Every index-tier read passes its writer's schema, so planning
+    * runs no schema-inference job. */
   private def graphProbeFilter(
       pchild: LogicalPlan, qvec: ArrayData, k: Int): Option[Expression] = {
     if (k <= 0) return None
@@ -226,6 +183,7 @@ class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       root <- bareScanPath(pchild)
       idAttr <- pchild.output.find(a =>
         a.name == graft.core.VectorSchema.ID && a.dataType == StringType)
+      table = new graft.table.VectorTable(spark, root, 1)
       // merge-on-read delete debt: the persisted index still carries
       // tombstoned rows, and on a gvdb scan the MoR anti-join removes
       // them ABOVE the planted candidate filter — so the probe must
@@ -233,8 +191,10 @@ class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // (< k live rows). Same capped-widening rule as the facade
       // (VectorDB.probeWidth): past WidenCap·k the widened beam is
       // doing brute-force-sized work, so the rewrite abstains and the
-      // plan stays exact.
-      debt = tombstoneDebt(root)
+      // plan stays exact. The count is the table's signature-cached
+      // one, and an unreadable tombstone table fails the plan: a
+      // swallowed error here would silently under-widen the probe.
+      debt = table.tombstoneCount
       if debt <= (graft.VectorDB.WidenCap - 1L) * k
     } yield {
       import spark.implicits._
@@ -243,7 +203,7 @@ class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // k LIVE candidates under merge-on-read deletes
       val kProbe = k + 8 + debt.toInt
       // surrogate-keyed live vectors for the code tiers' exact rerank
-      def corpus = spark.read.parquet(root).select(
+      def corpus = spark.read.schema(graft.core.VectorSchema.schema).parquet(root).select(
         F.xxhash64(F.col(graft.core.VectorSchema.ID)).as("vec_id"),
         F.col(graft.core.VectorSchema.EMBEDDING).as("embedding"))
       // Long.MinValue query key: disjoint from xxhash64 surrogates, so
@@ -256,25 +216,24 @@ class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // (sidecar present, artifact lost) — a planning-time index
       // consult must degrade, never fail the query.
       val hits = scala.util.Try {
-        hnswM(root) match {
-          case Some(m) =>
-            val graph = spark.read.parquet(root + ".hnsw")
-            val qg = Seq((0L, qvec.toFloatArray)).toDF("vec_id", "embedding")
-            graft.ops.Hnsw.probeGraph(graph, qg, kProbe, m = m, excludeSelf = false)
-              .select("neighbor_id").collect().map(_.getLong(0))
-          case None => ivfpqParams(root) match {
-            case Some((nProbe, slf)) =>
+        table.hnswIndexMeta match {
+          case Some(meta) =>
+            graft.ops.Hnsw.probeNearest(graft.ops.Hnsw.readGraph(spark, root + ".hnsw"),
+              qvec.toFloatArray, kProbe, m = meta.m)
+          case None => table.ivfPqIndexMeta match {
+            case Some(meta) =>
               val (ix, codes) = graft.ops.IvfPq.loadIndex(spark, root + ".ivfpq")
               graft.ops.IvfPq.search(q, ix, codes, corpus, kProbe,
-                  nProbe = nProbe, shortlistFactor = slf,
-                  nProbeMax = math.min(ix.nCells, 2 * nProbe), adaptRatio = 1.5)
+                  nProbe = meta.nProbe, shortlistFactor = meta.shortlistFactor,
+                  nProbeMax = math.min(ix.nCells, 2 * meta.nProbe), adaptRatio = 1.5)
                 .select("neighbor_id").collect().map(_.getLong(0))
-            case None => bqParams(root) match {
-              case Some((cf, ff, mean)) =>
-                val codes = spark.read.parquet(root + ".bq")
-                graft.ops.Similarity.bqTopKFromCodes(codes, q, corpus, kProbe,
-                    coarseFactor = cf, fineFactor = ff,
-                    center = Some(mean).filter(_.nonEmpty))
+            case None => table.bqIndexMeta match {
+              // centered codes are probed with a centered query (the
+              // sidecar's contract)
+              case Some(meta) =>
+                graft.ops.Similarity.bqTopKFromCodes(table.bqCodes.get, q, corpus, kProbe,
+                    coarseFactor = meta.coarseFactor, fineFactor = meta.fineFactor,
+                    center = Some(meta.mean).filter(_.nonEmpty))
                   .select("neighbor_id").collect().map(_.getLong(0))
               case None => Array.empty[Long]
             }
@@ -310,7 +269,8 @@ class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // projections per row > the distance scan it avoids). Abstain:
     // the exact plan is the better plan there.
     val lshIndexedButHidden = stored.isEmpty &&
-      bareScanPath(pchild).exists(root => sidecarText(root + ".ann_index.json").isDefined)
+      bareScanPath(pchild).exists(root =>
+        new graft.table.VectorTable(spark, root, 1).annIndexMeta.isDefined)
     if (lshIndexedButHidden) None
     else {
       val bucketsExpr = stored.getOrElse(LshBucketsExpr(embAttr, dim, tables, bits, seed))

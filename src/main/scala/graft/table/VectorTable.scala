@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, LongType, StructType}
 
 import graft.core.{HadoopFs, VectorSchema, WriterLock}
 
@@ -75,7 +76,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
     // them, exactly as in vacuum(), or the raw-minus-tombstones row
     // arithmetic (scan statistics, COUNT(*) pushdown) double-subtracts
     fs.delete(tombPath, true)
-    tombCountCache = None
+    VectorTable.tombCounts.remove(root)
     val out = fs.create(metaPath, true)
     try out.write(s"""{"tables": $tables, "bits": $bits, "seed": $seed}""".getBytes("UTF-8"))
     finally out.close()
@@ -152,17 +153,18 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
   }
 
   /** The persisted graph rows (seg, id, adj, emb), if an HNSW index has
-    * been built. Node ids are xxhash64 surrogates of the string id
-    * column (the graph kernel is Long-keyed); the query path joins the
-    * k surfaced surrogates back to the table, where a surrogate
-    * collision only costs a spurious candidate row that the final
-    * distance-ordered limit drops. */
+    * been built, read with the build's schema (no inference job). Node
+    * ids are xxhash64 surrogates of the string id column (the graph
+    * kernel is Long-keyed); the query path filters the table down to
+    * the surfaced surrogates, where a surrogate collision only costs a
+    * spurious candidate row that the final distance-ordered limit
+    * drops. */
   def hnswGraph: Option[DataFrame] =
     // existence-checked, not just meta-checked: a sidecar whose .hnsw
     // directory was lost must degrade the route to brute force, not
     // fail every query (indexed or not) at plan time
     if (hnswIndexMeta.isEmpty || !fs.exists(hnswGraphPath)) None
-    else Some(spark.read.parquet(hnswGraphPath.toString))
+    else Some(graft.ops.Hnsw.readGraph(spark, hnswGraphPath.toString))
 
   /** Long surrogate keys for the vector-index kernels (all three tiers
     * are Long-keyed): xxhash64 of the string id. The query path joins
@@ -199,7 +201,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
     * delta segments to bloat the probe fan-out. */
   def compactHnswIndex(maxRows: Long = graft.ops.Hnsw.RowsPerSegment / 2): this.type = {
     hnswIndexMeta.foreach { meta =>
-      val graph = spark.read.parquet(hnswGraphPath.toString)
+      val graph = graft.ops.Hnsw.readGraph(spark, hnswGraphPath.toString)
       val smallRows = graph.groupBy(col("seg")).agg(count(lit(1)).as("n"))
         .where(col("n") <= maxRows).agg(sum(col("n"))).head.get(0)
       val nRebuild = Option(smallRows).map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -235,7 +237,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
   private def autoCompactHnsw(): Unit = hnswIndexMeta.foreach { _ =>
     val mergeAt = spark.conf.get("spark.graft.hnsw.mergeAt", "8").toInt
     val maxRows = graft.ops.Hnsw.RowsPerSegment / 2
-    val nSmall = spark.read.parquet(hnswGraphPath.toString)
+    val nSmall = graft.ops.Hnsw.readGraph(spark, hnswGraphPath.toString)
       .groupBy(col("seg")).agg(count(lit(1)).as("n"))
       .where(col("n") <= maxRows).count()
     if (nSmall >= mergeAt) compactHnswIndex(maxRows)
@@ -378,10 +380,11 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
   }
 
   /** The persisted (neighbor_id, code) rows if a BQ index has been
-    * built; ids are xxhash64 surrogates. */
+    * built, read with [[VectorTable.BqCodeSchema]]; ids are xxhash64
+    * surrogates. */
   def bqCodes: Option[DataFrame] =
     if (bqIndexMeta.isEmpty) None
-    else Some(spark.read.parquet(bqCodesPath.toString))
+    else Some(spark.read.schema(VectorTable.BqCodeSchema).parquet(bqCodesPath.toString))
 
   private def dropBqIndex(): Unit = {
     fs.delete(bqCodesPath, true)
@@ -416,7 +419,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
     dropHnswIndex()
     dropIvfPqIndex()
     dropBqIndex()
-    tombCountCache = None
+    VectorTable.tombCounts.remove(root)
   }
 
   def exists: Boolean = fs.exists(hadoopPath)
@@ -513,7 +516,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
   def delete(cond: org.apache.spark.sql.Column): this.type = WriterLock.withLock(fs, root) {
     df.where(cond).select(VectorSchema.ID)
       .write.mode("append").parquet(tombPath.toString)
-    tombCountCache = None
+    VectorTable.tombCounts.remove(root)
     // OPT-IN auto-vacuum (the tombstone counterpart of the HNSW tier's
     // insert-path merge policy): when `spark.graft.vacuum.debtThreshold`
     // is set > 0 and the delete-debt ratio tombstones/(live+tombstones)
@@ -546,7 +549,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
         .as(VectorSchema.ID)), Seq(VectorSchema.ID), "left_semi")
       .select(VectorSchema.ID)
       .write.mode("append").parquet(tombPath.toString)
-    tombCountCache = None
+    VectorTable.tombCounts.remove(root)
     this
   }
 
@@ -561,19 +564,9 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
       WriterLock.withLock(fs, root) {
     liveIds.select(col(liveIds.columns.head).cast("string").as(VectorSchema.ID))
       .write.mode("append").parquet(tombPath.toString)
-    tombCountCache = None
+    VectorTable.tombCounts.remove(root)
     this
   }
-
-  /** [[tombstoneCount]] memo — without it every indexed query re-reads
-    * and distinct-counts the tombstone parquet just to size its probe
-    * widening. Keyed by the tombstone DIRECTORY's filesystem signature
-    * (file names + lengths + mtimes), not instance-locally: two
-    * instances over the same root see each other's deletes — a stale
-    * count here silently under-widens probes (fewer than k live rows).
-    * The signature is one FS listing per query, orders of magnitude
-    * cheaper than the distinct-count job it replaces. */
-  private var tombCountCache: Option[(Long, Long)] = None // (signature, count)
 
   private def tombSignature: Long =
     if (!fs.exists(tombPath)) 0L
@@ -589,14 +582,14 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
     * cached between deletes, signature-validated across instances. */
   def tombstoneCount: Long = {
     val sig = tombSignature
-    tombCountCache match {
+    Option(VectorTable.tombCounts.get(root)) match {
       case Some((s, n)) if s == sig => n
       case _ =>
         val n =
           if (sig == 0L) 0L
           else tombstonesDf
             .select(VectorSchema.ID).distinct().count()
-        tombCountCache = Some((sig, n))
+        VectorTable.tombCounts.put(root, (sig, n))
         n
     }
   }
@@ -764,7 +757,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
       fs.delete(hadoopPath, true)
       HadoopFs.rename(fs, tmp, hadoopPath)
       fs.delete(tombPath, true)
-      tombCountCache = Some((0L, 0L)) // no tombPath → signature 0
+      VectorTable.tombCounts.put(root, (0L, 0L)) // no tombPath → signature 0
       expireSnapshots() // data files rewritten: retention-zero expiry
       // a vacuum erases the tombstone table the index probe widens by,
       // but the persisted index still carries the dead ids — rebuild
@@ -935,7 +928,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
     fs.delete(metaPath, false)
     fs.delete(tombPath, true)
     fs.delete(snapsRoot, true)
-    tombCountCache = None
+    VectorTable.tombCounts.remove(root)
     dropHnswIndex() // new data: a stale index would serve ghost rows
     dropIvfPqIndex()
     dropBqIndex()
@@ -944,4 +937,26 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
       .write.mode("overwrite").parquet(root)
     if (buildIndex) buildAnnIndex()
   }
+}
+
+object VectorTable {
+
+  /** The schema of the BQ tier's code table ([[VectorTable.buildBqIndex]]). */
+  val BqCodeSchema: StructType = new StructType()
+    .add("neighbor_id", LongType)
+    .add("code", BinaryType)
+
+  /** [[VectorTable.tombstoneCount]] memo per table root:
+    * (tombstone-directory signature, count). Without it every indexed
+    * query — and every SQL k-NN plan the ANN rewrite consults the index
+    * for — re-reads and distinct-counts the tombstone parquet just to
+    * size its probe widening. Held here rather than per instance, so
+    * the short-lived instances the planner and catalog open hit it too;
+    * validated by the directory's filesystem signature (file names +
+    * lengths + mtimes), so an instance never serves a count stale
+    * against another instance's delete — a stale count silently
+    * under-widens probes (fewer than k live rows). The signature is one
+    * FS listing per query, orders of magnitude cheaper than the
+    * distinct-count job it replaces. */
+  private val tombCounts = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
 }

@@ -267,6 +267,49 @@ class VectorDBSpec extends SparkSpec with Matchers {
     db.table.drop()
   }
 
+  test("serving queries: a filtered query runs no job before collect, an indexed one ≤ 3 in all") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def jobs[T](group: String)(body: => T): (T, Int) = {
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      (out, sc.statusTracker.getJobIdsForGroup(group).length)
+    }
+    val db = newDb("t6jobs")
+    // distinct random vectors: no distance ties, so rankings compare
+    // id for id
+    val rnd = new scala.util.Random(7)
+    def vec() = Array.fill(16)(rnd.nextGaussian().toFloat)
+    db.insertEmbedded((0 until 80).map(i => (s"""{"id": $i, "group": ${i % 3}}""", vec()))
+      .toDF("metadata", "embedding"))
+    db.table.buildHnswIndex()
+    val qv = vec()
+    def sameRows(got: Array[graft.core.Result], want: Array[graft.core.Result]): Unit = {
+      got.map(_.id).toSeq shouldBe want.map(_.id).toSeq
+      got.zip(want).foreach { case (g, w) => g.distance shouldBe w.distance +- 1e-4 }
+    }
+    // filtered: the exact route, planned without touching the index
+    val filters = Seq(Cmp("group", CmpOp.Eq, 1))
+    val (fq, routeJobs) = jobs("filtered-route")(db.queryByVector(qv, k = 5, filters = filters))
+    routeJobs shouldBe 0
+    sameRows(fq.collect(), db.queryByVector(qv, k = 5, filters = filters, useIndex = false).collect())
+    // unfiltered: one graph probe plus one scan of the live view
+    val (indexed, allJobs) = jobs("indexed")(db.queryByVector(qv, k = 10).collect())
+    allJobs should be <= 3
+    val exact = db.queryByVector(qv, k = 10, useIndex = false).collect()
+    sameRows(indexed, exact)
+    // tombstones on the k nearest rows, under the WidenCap: the widened
+    // probe still answers k live rows, equal to brute force
+    val nearest = exact.map(_.id)
+    db.table.delete(col(graft.core.VectorSchema.ID).isin(nearest.toSeq: _*))
+    db.probeWidth(10) shouldBe Some(20)
+    val live = db.queryByVector(qv, k = 10).collect()
+    live.length shouldBe 10
+    live.map(_.id).toSet intersect nearest.toSet shouldBe empty
+    sameRows(live, db.queryByVector(qv, k = 10, useIndex = false).collect())
+    db.table.drop()
+  }
+
   test("tombstone count is visible across table instances on the same root") {
     val db = newDb("t6x")
     db.insert(docs(30), embedField = Some("text"))

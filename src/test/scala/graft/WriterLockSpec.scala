@@ -116,6 +116,51 @@ class WriterLockSpec extends SparkSpec with Matchers {
     spark.sql("DROP TABLE wlc.rl.t")
   }
 
+  test("SQL DELETE with a JSON-path predicate takes the writer lock before reading any row") {
+    import spark.implicits._
+    val wh = Files.createTempDirectory("graft-lockspec-delete").toString
+    spark.conf.set("spark.sql.catalog.wld", "graft.sources.GvdbCatalog")
+    spark.conf.set("spark.sql.catalog.wld.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS wld.rl")
+    spark.sql("CREATE TABLE wld.rl.t (id string, metadata string, embedding array<float>) USING gvdb")
+    (0 until 5).map(i => (s"w$i", s"""{"n": "$i"}""", Seq(i.toFloat, 0f)))
+      .toDF("id", "metadata", "embedding").createOrReplaceTempView("lock_del_base")
+    spark.sql("INSERT INTO wld.rl.t SELECT * FROM lock_del_base")
+    val root = s"$wh/rl/t"
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the predicate is untranslatable (a UDF over a JSON path), so it
+    // takes the tombstoning GvdbDeleteCommand; every row it reads
+    // passes through the counting UDF
+    WriterLockSpec.reads.set(0)
+    spark.udf.register("lock_probe", (s: String) => { WriterLockSpec.reads.incrementAndGet(); s })
+    val delete = """DELETE FROM wld.rl.t WHERE lock_probe(get_json_object(metadata, '$.n')) = '2'"""
+    def lockError(t: Throwable): Boolean =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[WriterLock.ConcurrentWriteException])
+
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val holder = new Thread(() => WriterLock.withLock(fs, root) {
+      entered.countDown()
+      release.await()
+    })
+    holder.start()
+    entered.await()
+    try {
+      lockError(intercept[Exception](spark.sql(delete))) shouldBe true
+      WriterLockSpec.reads.get shouldBe 0
+    } finally {
+      release.countDown()
+      holder.join()
+    }
+    // the lock released, the delete commits
+    spark.sql(delete)
+    WriterLockSpec.reads.get should be > 0
+    spark.sql("SELECT id FROM wld.rl.t ORDER BY id").collect().map(_.getString(0)) shouldBe
+      Array("w0", "w1", "w3", "w4")
+    spark.sql("DROP TABLE wld.rl.t")
+  }
+
   test("a stale marker from a crashed writer is broken, not honored forever") {
     val root = freshRoot("stale")
     rows("w", 0 until 3).write.format("gvdb").option("dim", "2")
